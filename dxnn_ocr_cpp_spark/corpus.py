@@ -24,10 +24,6 @@ import random
 
 EPOCH_2026 = 1767225600  # 2026-01-01T00:00:00Z, fixed (no wall clock)
 
-# bump when generator output changes for ANY (seed, i): cached corpus
-# parquet (bench) is keyed on this, so stale caches can't be reused
-CORPUS_VERSION = 2
-
 HOSTS = [f"host{i:02d}.example.org" for i in range(20)]
 
 _WORDS_EN = (

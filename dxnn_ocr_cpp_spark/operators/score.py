@@ -24,28 +24,17 @@ from pyspark.sql import functions as F
 from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG, ExtractionConfig
 
 
-def _boiler_path_regex(cfg: ExtractionConfig) -> str:
-    # matches 'nav[2]' path segments anywhere in the tag_path
-    alts = "|".join(cfg.boiler_ancestors)
-    return f"(^|/)({alts})\\["
-
-
 def link_density(b: Column) -> Column:
     return b["n_link_chars"] / F.greatest(b["n_text_chars"], F.lit(1))
 
 
-def block_score(b: Column, cfg: ExtractionConfig = DEFAULT_CONFIG,
-                slim: bool = False) -> Column:
+def block_score(b: Column, cfg: ExtractionConfig = DEFAULT_CONFIG) -> Column:
     """Score expression for one block struct (use inside F.transform).
-    slim blocks carry the Python-computed `boiler` verdict (a boolean
-    read) instead of tag_path (a per-block regex) — same prior by
-    construction (segment._is_boiler_path mirrors
-    _boiler_path_regex; equality pinned by the extract-vs-
-    extract_blocks parity in tests/test_pipeline_spark.py)."""
-    boiler = (b["boiler"] if slim
-              else b["tag_path"].rlike(_boiler_path_regex(cfg)))
+    The boiler-ancestor prior reads the block's `boiler` verdict, which
+    segment_one computes once in Python on both the slim and the full
+    schema — one predicate, so the two paths cannot disagree."""
     prior = (
-        F.when(boiler, F.lit(0.0))
+        F.when(b["boiler"], F.lit(0.0))
         .when(b["tag"].isin(*cfg.content_tags), F.lit(1.0))
         .otherwise(F.lit(0.7))
     )
@@ -56,29 +45,9 @@ def block_score(b: Column, cfg: ExtractionConfig = DEFAULT_CONFIG,
 
 
 def with_scored_blocks(df, cfg: ExtractionConfig = DEFAULT_CONFIG,
-                       seg_col: str = "seg", out_col: str = "scored",
-                       slim: bool = False):
-    """blocks array -> scored-blocks array (adds `score` field).
-    Pure column expressions — zero shuffle, zero Python."""
-    blocks = F.col(f"{seg_col}.blocks")
-
-    def scored_struct(b):
-        fields = [
-            b["block_id"].alias("block_id"),
-            b["tag"].alias("tag"),
-        ]
-        if not slim:
-            fields.append(b["tag_path"].alias("tag_path"))
-        fields += [
-            b["depth"].alias("depth"),
-            b["pos"].alias("pos"),
-            b["text"].alias("text"),
-            b["n_text_chars"].alias("n_text_chars"),
-            b["n_link_chars"].alias("n_link_chars"),
-        ]
-        if not slim:
-            fields.append(b["n_tags"].alias("n_tags"))
-        fields.append(block_score(b, cfg, slim=slim).alias("score"))
-        return F.struct(*fields)
-
-    return df.withColumn(out_col, F.transform(blocks, scored_struct))
+                       seg_col: str = "seg", out_col: str = "scored"):
+    """blocks array -> scored-blocks array (each block struct plus a
+    `score` field). Pure column expressions — zero shuffle, zero Python."""
+    return df.withColumn(out_col, F.transform(
+        F.col(f"{seg_col}.blocks"),
+        lambda b: b.withField("score", block_score(b, cfg))))

@@ -31,9 +31,8 @@ def _boiler_re(boiler_ancestors: tuple):
     """Compiled form of the boiler-ancestor predicate — one C-level
     scan per block instead of a per-segment split/membership loop
     (profiled at ~10% of the whole kernel on the bench corpus).
-    Same pattern shape as score._boiler_path_regex: a path segment is
-    'tag[n]', so a boiler tag is always followed by '[' and preceded
-    by start-of-string or '/'."""
+    A path segment is 'tag[n]', so a boiler tag is always followed by
+    '[' and preceded by start-of-string or '/'."""
     import re
     alts = "|".join(re.escape(t) for t in boiler_ancestors)
     return re.compile(f"(?:^|/)(?:{alts})\\[")
@@ -42,9 +41,8 @@ def _boiler_re(boiler_ancestors: tuple):
 def _is_boiler_path(tag_path: str, boiler_ancestors) -> bool:
     """The boiler-ancestor predicate, computed ONCE Python-side: any
     path segment's tag (before its '[n]' index) is a boiler ancestor.
-    Single source of truth for the slim hot path, extract_python, and
-    (semantically) score.py's tag_path regex on the full-schema path —
-    pinned equal by tests/test_pipeline_spark.py parity."""
+    segment_one ships it as each block's `boiler` field on both
+    schemas; score.block_score and extract_python read that field."""
     return _boiler_re(tuple(boiler_ancestors)) \
         .search(tag_path) is not None
 
@@ -52,8 +50,8 @@ def _is_boiler_path(tag_path: str, boiler_ancestors) -> bool:
 def segment_one(raw: bytes | None, cfg: ExtractionConfig,
                 slim: bool = False) -> dict:
     """Per-document segmentation -> plain dict matching SEGMENT_RESULT
-    (slim=True: SEGMENT_RESULT_SLIM — tag_path replaced by its 1-byte
-    `boiler` verdict, n_tags dropped; the Arrow-boundary diet the
+    (slim=True: SEGMENT_RESULT_SLIM — tag_path and n_tags dropped, only
+    the 1-byte `boiler` verdict kept; the Arrow-boundary diet the
     schema comment in schemas.py quantifies). Exposed separately so
     unit tests and goldens exercise the exact production code path
     without a JVM."""
@@ -80,11 +78,9 @@ def segment_one(raw: bytes | None, cfg: ExtractionConfig,
             "text": t,
             "n_text_chars": n_text,
             "n_link_chars": min(b.n_link_chars, n_text),
+            "boiler": _is_boiler_path(b.tag_path, cfg.boiler_ancestors),
         }
-        if slim:
-            rec["boiler"] = _is_boiler_path(b.tag_path,
-                                            cfg.boiler_ancestors)
-        else:
+        if not slim:
             rec["tag_path"] = b.tag_path
             rec["n_tags"] = b.n_tags
         blocks.append(rec)

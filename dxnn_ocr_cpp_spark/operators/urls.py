@@ -201,6 +201,16 @@ def url_wordlist_score(df: DataFrame, weighted_words,
         raise ValueError(
             "url_wordlist_score: entries vanish under normalization "
             "(only separator chars [-._%])")
+    # two entries that normalize alike ('bad-word', 'bad.word') would
+    # each add their weight for one word — reject, so a word
+    # contributes its weight once
+    from collections import Counter
+    dup = sorted(w for w, c in Counter(w for w, _ in pairs).items()
+                 if c > 1)
+    if dup:
+        raise ValueError(
+            f"url_wordlist_score: entries collide under normalization "
+            f"{dup[:3]} — merge them into one weight")
     if not pairs:
         raise ValueError("url_wordlist_score: empty word list")
     if len(pairs) > 1000:

@@ -81,13 +81,13 @@ def extract(documents: DataFrame,
         df = df.repartitionByRange(n, F.length("html"), F.xxhash64("url"))
     elif repartition_to:
         df = salted_repartition(df, repartition_to, salt_buckets=cfg.salt_buckets)
-    # slim blocks on the hot path: the Arrow return leg ships the
-    # 1-byte boiler verdict instead of the ~2 KB/doc tag_path string
-    # and drops unread n_tags (schemas.BLOCK_SLIM — measured ~28% of
+    # slim blocks on the hot path: the Arrow return leg drops the
+    # ~2 KB/doc tag_path string and unread n_tags, keeping only the
+    # 1-byte boiler verdict (schemas.BLOCK_SLIM — tag_path was ~28% of
     # the UDF's return bytes on the bench corpus). extract_blocks
     # keeps the full schema for the checkpoint/lineage table.
     df = with_blocks(df, cfg, slim=True)       # stage 1
-    df = with_scored_blocks(df, cfg, slim=True)  # stage 2
+    df = with_scored_blocks(df, cfg)           # stage 2
     df = with_spans(df, cfg,                   # stage 3
                     task_col=TASK_CONFIG_COL if has_task else None)
     df = with_final_text(df, cfg)              # finalize
@@ -140,8 +140,7 @@ def extract_python(url: str, html: bytes | None,
     extract() semantics 1:1 (score/filter formulas kept in sync by the
     tests/test_parity.py cross-check). task mirrors the per-row
     task_cfg struct: non-None keys override cfg thresholds."""
-    from dxnn_ocr_cpp_spark.operators.segment import (_is_boiler_path,
-                                                      segment_one)
+    from dxnn_ocr_cpp_spark.operators.segment import segment_one
 
     t = task or {}
 
@@ -152,8 +151,7 @@ def extract_python(url: str, html: bytes | None,
     seg = segment_one(html, cfg)
     spans = []
     for b in seg["blocks"]:
-        boiler = _is_boiler_path(b["tag_path"], cfg.boiler_ancestors)
-        prior = 0.0 if boiler else (1.0 if b["tag"] in cfg.content_tags else 0.7)
+        prior = 0.0 if b["boiler"] else (1.0 if b["tag"] in cfg.content_tags else 0.7)
         ld = min(b["n_link_chars"] / max(b["n_text_chars"], 1), 1.0)
         length_term = 0.5 + 0.5 * min(b["n_text_chars"] / float(cfg.length_norm_chars), 1.0)
         score = prior * (1.0 - ld) * length_term

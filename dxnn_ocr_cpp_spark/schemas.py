@@ -31,11 +31,14 @@ TASK_CONFIG = T.StructType([
 
 # per-candidate block (TextBox analog, types.hpp:13-53). `text` is
 # already normalized by htmlseg.normalize_text — normalization happens
-# exactly once, inside the stage-1 UDF.
+# exactly once, inside the stage-1 UDF. `boiler` is the boiler-ancestor
+# verdict on tag_path, computed once in Python (segment._is_boiler_path)
+# and read by score.block_score on both the slim and the full schema.
 BLOCK = T.StructType([
     T.StructField("block_id", T.IntegerType(), False),
     T.StructField("tag", T.StringType(), False),
     T.StructField("tag_path", T.StringType(), False),
+    T.StructField("boiler", T.BooleanType(), False),
     T.StructField("depth", T.IntegerType(), False),
     T.StructField("pos", T.IntegerType(), False),
     T.StructField("text", T.StringType(), False),
@@ -56,10 +59,9 @@ SEGMENT_RESULT = T.StructType([
 # SLIM block for the extract() hot path: the Arrow return leg is the
 # data plane's biggest flow (measured ~7.1 KB/doc vs ~5.5 KB/doc on
 # the input leg at the bench corpus), and tag_path alone is ~28% of
-# it — yet the hot path consumes tag_path ONLY as the boiler-ancestor
-# predicate, so the UDF ships the 1-byte `boiler` verdict instead of
-# the ~2 KB path string (and drops n_tags, which nothing on the hot
-# path reads). extract_blocks() keeps the full BLOCK schema — the
+# it — yet the hot path needs only the 1-byte `boiler` verdict, so the
+# UDF drops the ~2 KB path string (and n_tags, which nothing on the
+# hot path reads). extract_blocks() keeps the full BLOCK schema — the
 # checkpoint/lineage table still exposes tag_path and n_tags.
 BLOCK_SLIM = T.StructType([
     T.StructField("block_id", T.IntegerType(), False),

@@ -1,13 +1,9 @@
-"""bench.py reporting policy units — no Spark, no measurement.
+"""bench.py reporting units — no Spark, no measurement.
 
-The round-2 failure modes these pin:
-  * a physically impossible engine headline (median efficiency above
-    the host's own ceiling) passed the validity gate and REPLACED the
-    stable cache;
-  * a stale stable cache could be republished after the gate
-    tightened;
-  * the final stdout JSON line overflowed the driver's 2000-char tail
-    capture, recording no parsed bench at all.
+Pins the one stdout contract the query bench keeps: its final JSON line
+fits the 2,000-char tail a caller captures (a 63-query line once
+overflowed it and no bench was parsed at all), and every query it
+times is registered in `__spark_entry__.queries()`.
 """
 
 import json
@@ -15,578 +11,28 @@ import json
 import bench
 
 
-class TestWindowUnstable:
-    def test_healthy_window_is_stable(self):
-        assert not bench.window_unstable(
-            bracket_probes=[0.95, 0.97], eff_rounds=[0.94, 0.96, 0.95],
-            eff=0.95, ceiling=0.97)
-
-    def test_probe_drift_flags(self):
-        assert bench.window_unstable(
-            bracket_probes=[1.06, 0.95], eff_rounds=[0.95, 0.95, 0.95],
-            eff=0.95, ceiling=0.95)
-
-    def test_round_spread_flags(self):
-        assert bench.window_unstable(
-            bracket_probes=[0.95], eff_rounds=[0.80, 1.01, 0.95],
-            eff=0.95, ceiling=0.95)
-
-    def test_high_steal_flags_even_when_rounds_agree(self):
-        # the observed failure: both wide rounds agreed at ~0.37
-        # (spread fine, probes fine) while the hypervisor stole ~13%
-        # of the load-period core budget
-        assert bench.window_unstable(
-            bracket_probes=[0.84, 0.82], eff_rounds=[0.3517, 0.387],
-            eff=0.3694, ceiling=0.8406, max_steal=0.131)
-
-    def test_low_steal_does_not_flag(self):
-        assert not bench.window_unstable(
-            bracket_probes=[0.95, 0.97], eff_rounds=[0.94, 0.96, 0.95],
-            eff=0.95, ceiling=0.97, max_steal=0.02)
-
-    def test_superunit_engine_median_flags(self):
-        # the exact r2 numbers: median 1.0508 vs ceiling 0.9541
-        assert bench.window_unstable(
-            bracket_probes=[0.9541, 0.8793],
-            eff_rounds=[1.0508, 1.0519, 0.9577],
-            eff=1.0508, ceiling=0.9541)
-
-    def test_engine_above_host_ceiling_flags(self):
-        # median <= 1.02 but still 10% above what the host can do
-        assert bench.window_unstable(
-            bracket_probes=[0.80, 0.82], eff_rounds=[0.90, 0.91, 0.90],
-            eff=0.90, ceiling=0.82)
-
-    def test_wide_window_low_ceiling_is_not_unstable(self):
-        # 8->32 on this VM: host ceiling ~0.75 and engine below it is
-        # business as usual, not drift
-        assert not bench.window_unstable(
-            bracket_probes=[0.74, 0.76], eff_rounds=[0.70, 0.72, 0.71],
-            eff=0.71, ceiling=0.76, dps=(5000.0, 11000.0))
-
-    def test_nonmonotone_throughput_flags(self):
-        # zero-shuffle embarrassingly-parallel job: best throughput at
-        # 4x cores BELOW the lo level = the hi legs ran on a throttled
-        # host (the r3 cgroup window), not an engine property
-        assert bench.window_unstable(
-            bracket_probes=[0.96, 0.84], eff_rounds=[0.21, 0.26, 0.18],
-            eff=0.21, ceiling=0.96, dps=(6666.0, 6295.0))
-
-    def test_poisoned_nonmonotone_cache_never_republished(
-            self, tmp_path, monkeypatch):
-        import json as _json
-        import platform
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / "s.json")
-        w = TestStableWindowPolicy()._window(0.21, 0.96, unstable=False)
-        w["local[8]"]["docs_per_sec"] = 5.0  # below local[2]'s 10.0
-        key = {"corpus": "c", "levels": [2, 8],
-               "code": bench._package_code_digest(),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "s.json").write_text(
-            _json.dumps({"window_key": key, **w}))
-        bad = TestStableWindowPolicy()._window(0.7, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, (2, 8), "c")
-        assert out["scaling_efficiency"] == 0.7  # verbatim, no swap
-
-
-class TestStableWindowPolicy:
-    LEVELS = (2, 8)
-
-    def _window(self, eff, ceiling, unstable):
-        return {
-            "local[2]": {"cores": 2, "wall_sec": 100.0, "docs": 1000,
-                         "docs_per_sec": 10.0, "chars_per_sec": 1.0},
-            "local[8]": {"cores": 8, "wall_sec": 25.0, "docs": 1000,
-                         "docs_per_sec": 40.0, "chars_per_sec": 4.0},
-            "scaling_factor": 4.0,
-            "scaling_efficiency": eff,
-            "scaling_efficiency_best": eff,
-            "efficiency_per_round": [eff],
-            "host_cpu_ceiling": ceiling,
-            "host_ceiling_probes": [ceiling],
-            "efficiency_vs_host_ceiling": round(eff / ceiling, 4),
-            "host_window_unstable": unstable,
-        }
-
-    def test_stable_window_writes_cache_and_is_returned(self, tmp_path,
-                                                        monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        w = self._window(0.95, 0.97, unstable=False)
-        out = bench.stable_window_policy(w, self.LEVELS, "corpusA")
-        assert out is w
-        cached = json.loads(
-            (tmp_path / "stable_2_8.json").read_text())
-        assert cached["scaling_efficiency"] == 0.95
-        assert cached["window_key"]["corpus"] == "corpusA"
-
-    def test_unstable_window_substitutes_valid_cache(self, tmp_path,
-                                                     monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.95
-        assert out["unstable_current_window"]["scaling_efficiency"] == 0.70
-
-    def test_poisoned_cache_never_republished(self, tmp_path, monkeypatch):
-        # a cache written before the engine-side gate existed (eff
-        # above the host ceiling) must NOT substitute for an unstable
-        # current window — the current window is reported verbatim
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        import platform
-
-        poisoned = self._window(1.0508, 0.9541, unstable=False)
-        key = {"corpus": "corpusA", "levels": list(self.LEVELS),
-               "code": bench._package_code_digest(),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "stable_2_8.json").write_text(
-            json.dumps({"window_key": key, **poisoned}))
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.70  # verbatim, no swap
-
-    def test_unpinned_cache_not_borrowed_for_pinned_run(
-            self, tmp_path, monkeypatch):
-        # methodology marker: a stable window measured WITHOUT cpuset
-        # pinning has a differently-borrowed lo-leg denominator and
-        # must never substitute for a pinned run (or vice versa)
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        monkeypatch.setattr(bench, "PIN_CPUS", False)
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        monkeypatch.setattr(bench, "PIN_CPUS", True)
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.70  # verbatim, no swap
-
-    def test_cache_key_mismatch_not_borrowed(self, tmp_path, monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusB")
-        assert out["scaling_efficiency"] == 0.70
-
-
-class TestPerCoreAccounting:
-    def test_proc_stat_busy_monotone(self):
-        a = bench._proc_stat_busy()
-        sum(i * i for i in range(2_000_000))  # burn a little CPU
-        b = bench._proc_stat_busy()
-        assert b >= a > 0.0
-
-    def test_borrowed_cores_scenario(self):
-        # the wide-window artifact: local[8] measurably used 11 cores
-        # (JVM work on idle cores), local[32] used 28. Raw ratio reads
-        # 0.51; per-busy-core reads the engine's true scalability.
-        lo = {"docs_per_sec": 5846.0, "cores_used": 11.0}
-        hi = {"docs_per_sec": 11615.0, "cores_used": 28.0}
-        r = bench.per_core_ratio(hi, lo, lo)
-        assert abs(r - (11615.0 / 28.0) / (5846.0 / 11.0)) < 1e-9
-        assert 0.7 < r < 0.85  # raw would be 11615/(4*5846) = 0.497
-
-    def test_missing_cores_used_returns_none(self):
-        lo = {"docs_per_sec": 10.0, "cores_used": 2.1}
-        hi = {"docs_per_sec": 40.0}  # pre-instrumentation round
-        assert bench.per_core_ratio(hi, lo, lo) is None
-        assert bench.per_core_ratio(
-            {"docs_per_sec": 40.0, "cores_used": 8.0},
-            {"docs_per_sec": 10.0}, lo) is None
-
-    def test_ext_summary_carries_per_core_when_present(self):
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        assert "per_core_eff" not in bench._ext_summary(w, (2, 8))
-        w["per_core_efficiency"] = 0.88
-        s = bench._ext_summary(w, (2, 8))
-        assert s["per_core_eff"] == 0.88
-        assert len(json.dumps(s)) < 280
-
-
 class TestCompactLine:
-    def test_ext_summary_is_small_and_scalar(self):
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        s = bench._ext_summary(w, (2, 8))
-        assert s["efficiency"] == 0.95
-        assert s["docs_per_sec"] == {"2": 10.0, "8": 40.0}
-        assert len(json.dumps(s)) < 250
-
     def test_full_compact_line_fits_tail_capture(self):
-        # worst-case shape: every inline query present at 4-char
-        # timings + both window summaries
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        wide = dict(w)
-        wide["local[32]"] = w["local[8]"]
-        compact = {
-            "metric": "bench_total_wall", "value": 999.999,
+        # worst case: every headline query present at 7-char timings
+        payload = {
+            "metric": "bench_total_wall", "value": 99999.999,
             "unit": "sec",
-            "queries": {k: 99.999 for k in bench.INLINE_QUERIES},
+            "queries": {k: 999.999 for k in bench.HEADLINE},
             "sf": "sf0.1",
-            "extraction": bench._ext_summary(w, (2, 8)),
-            "detail": "BENCH/bench_detail.json",
-            "extraction_wide": bench._ext_summary(wide, (8, 32)),
+            "host": {"cpu": "x" * 200, "host_cores": 4096, "cpus": 4096},
         }
-        assert len(json.dumps(compact)) < 1500
+        line = bench.compact_line(payload)
+        assert "\n" not in line and len(line) <= bench.MAX_LINE
+        out = json.loads(line)
+        assert out["queries"] == {k: 999.999 for k in bench.INLINE_QUERIES}
+        assert out["value"] == 99999.999 and out["cpus"] == 4096
+        assert not any(k.startswith("extraction") for k in out)
 
 
-class TestQueriesOnly:
-    def test_reuses_cached_stable_windows(self, tmp_path, monkeypatch,
-                                          capsys):
-        import sys as _sys
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"s_{levels[0]}_{levels[1]}.json")
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        (tmp_path / "s_2_8.json").write_text(json.dumps(w))
-        # wide cache absent -> queries-only must cope without it
-        monkeypatch.setattr(bench, "SCALING_LEVELS", (2, 8))
-        monkeypatch.setattr(bench, "run_queries",
-                            lambda: {"q1": 1.25, "q2": 0.75})
-        monkeypatch.setattr(_sys, "argv", ["bench.py", "--queries-only"])
-        bench.main()
-        line = capsys.readouterr().out.strip().splitlines()[-1]
-        d = json.loads(line)
-        assert d["value"] == 2.0
-        assert d["extraction"]["efficiency"] == 0.95
-        assert "extraction_wide" not in d
-        # report + detail written against the cached window
-        assert (tmp_path / "BENCH" / "bench_detail.json").exists()
-        assert "0.95" in (tmp_path / "BENCH" / "BASELINE.md").read_text()
-
-
-class TestBudgetAwareDefault:
-    """The round-4 regression: the default bench re-measured all three
-    scaling windows unconditionally (est. 40-70 min) and the driver
-    killed it at timeout — recording NO perf data. The default path
-    must now always emit its one-line JSON within
-    SPARK_GRAFT_BENCH_BUDGET, reusing committed stable windows
-    (labeled) when a re-measure doesn't fit."""
-
-    def _cache(self, tmp_path, monkeypatch, *, key_ok=True):
-        import platform
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="":
-                tmp_path / f"s{'_' + mode if mode else ''}"
-                           f"_{levels[0]}_{levels[1]}.json")
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        key = {"corpus": "c", "levels": [2, 8],
-               "code": (bench._package_code_digest() if key_ok
-                        else "stale"),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "s_2_8.json").write_text(json.dumps(
-            {"measured_at": "2026-08-21T02:30:35+00:00",
-             "window_key": key, **w}))
-        return w
-
-    def test_no_budget_reuses_cache_labeled(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)
-        monkeypatch.setattr(
-            bench, "run_scaling",
-            lambda *a, **k: (_ for _ in ()).throw(
-                AssertionError("re-measured over budget")))
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() + 5.0, required=True)
-        assert out["remeasure_skipped"] == "budget"
-        assert out["measured_at"] == "2026-08-21T02:30:35+00:00"
-        assert "cache_key_stale" not in out
-        s = bench._ext_summary(out, (2, 8))
-        assert s["cached"] == "2026-08-21T02:30:35+00:00"
-
-    def test_stale_code_cache_is_flagged(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch, key_ok=False)
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() + 5.0, required=True)
-        assert out["cache_key_stale"] is True
-        assert bench._ext_summary(out, (2, 8))["stale"] is True
-
-    def test_fitting_budget_measures_fresh(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)
-        fresh = TestStableWindowPolicy()._window(0.9, 0.95,
-                                                unstable=False)
-        monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
-        monkeypatch.setattr(bench, "run_scaling",
-                            lambda *a, **k: fresh)
-        out = bench.measure_or_reuse_window((2, 8), deadline=None,
-                                            required=True)
-        assert out["scaling_efficiency"] == 0.9
-        assert "remeasure_skipped" not in out
-
-    def test_optional_window_without_cache_is_omitted(
-            self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)  # only the 2_8 cache exists
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (8, 32), deadline=_t.monotonic() + 5.0, required=False)
-        assert out is None
-
-    def test_required_window_without_cache_measures_over_budget(
-            self, tmp_path, monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / "absent.json")
-        fresh = TestStableWindowPolicy()._window(0.9, 0.95,
-                                                unstable=False)
-        monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
-        monkeypatch.setattr(bench, "run_scaling",
-                            lambda *a, **k: fresh)
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() - 1.0, required=True)
-        assert out["scaling_efficiency"] == 0.9
-
-    def test_default_estimates_exceed_default_budget_when_cached(self):
-        # the concrete r5 contract: with the committed stable windows
-        # on this VM, NO window re-measure fits the default 480 s
-        # budget once queries have run — the default driver run is
-        # queries + cached windows, well under its timeout
-        for levels, mode, mr in [((2, 8), "", 3), ((8, 32), "", 2),
-                                 ((8, 32), "iso", 2)]:
-            assert bench._window_cost_estimate(levels, mode, mr) > 300
-
-
-class TestDeadlineCappedRounds:
-    """VERDICT r4 ask #4: window extension rounds are capped by
-    wall-clock budget, not only by round count."""
-
-    def _fake_workers(self, walls={"n": 0}):
-        # alternating throughput so the matched-pair ratio spread
-        # stays > 0.1 and the noise extension WANTS to run
-        def lo_fn(cores):
-            return {"cores": cores, "wall_sec": 5.0, "docs": 100,
-                    "docs_per_sec": 20.0}
-
-        def hi_fn(cores):
-            walls["n"] += 1
-            dps = 80.0 if walls["n"] % 2 else 40.0
-            return {"cores": cores, "wall_sec": 5.0, "docs": 100,
-                    "docs_per_sec": dps}
-        return lo_fn, hi_fn
-
-    def _quiet_probes(self, monkeypatch):
-        monkeypatch.setattr(
-            bench, "cpu_ceiling",
-            lambda lo, hi, with_steal=False:
-                (0.95, 0.0) if with_steal else 0.95)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-
-    def test_noisy_window_extends_without_deadline(self, monkeypatch):
-        self._quiet_probes(monkeypatch)
-        lo_fn, hi_fn = self._fake_workers()
-        out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
-                                max_rounds=4, hi_worker=hi_fn,
-                                lo_worker=lo_fn)
-        assert len(out["efficiency_per_round"]) == 4  # extended
-
-    def test_noisy_window_respects_deadline(self, monkeypatch):
-        import time as _t
-        self._quiet_probes(monkeypatch)
-        lo_fn, hi_fn = self._fake_workers()
-        out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
-                                max_rounds=4, hi_worker=hi_fn,
-                                lo_worker=lo_fn,
-                                deadline=_t.monotonic() + 0.5)
-        # min_rounds always run; extensions don't fit a 0.5 s budget
-        # against the 12 s estimated round cost
-        assert len(out["efficiency_per_round"]) == 2
-        assert out["host_window_unstable"]  # spread published as-is
-
-
-class TestCodeDigestClosure:
-    def test_insensitive_to_non_extraction_modules(self, monkeypatch,
-                                                   tmp_path):
-        # copy the package tree, touch a curation-side file: digest
-        # must NOT change (a dedup operator edit must not invalidate a
-        # measured-stable scaling window that never executed it)
-        import shutil
-        pkg = tmp_path / "dxnn_ocr_cpp_spark"
-        shutil.copytree(bench.REPO / "dxnn_ocr_cpp_spark", pkg)
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        before = bench._package_code_digest()
-        (pkg / "operators" / "dedup.py").write_text("# changed\n")
-        assert bench._package_code_digest() == before
-
-    def test_sensitive_to_hot_path(self, monkeypatch, tmp_path):
-        import shutil
-        pkg = tmp_path / "dxnn_ocr_cpp_spark"
-        shutil.copytree(bench.REPO / "dxnn_ocr_cpp_spark", pkg)
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        before = bench._package_code_digest()
-        with open(pkg / "htmlseg.py", "a") as f:
-            f.write("\n# semantics change\n")
-        assert bench._package_code_digest() != before
-
-    def test_closure_files_all_exist(self):
-        pkg = bench.REPO / "dxnn_ocr_cpp_spark"
-        missing = [r for r in bench._EXTRACTION_CLOSURE
-                   if not (pkg / r).exists()]
-        assert not missing, missing
-
-
-class TestIsoShardSlicing:
-    def test_shards_partition_files_disjointly(self):
-        # worker w of W reads files[w::W]: together the shards must
-        # cover every corpus file exactly once (a gap would silently
-        # shrink the measured hi-leg work; an overlap would double it)
-        files = [f"part-{i:05d}.parquet" for i in range(64)]
-        W = 4
-        shards = [files[w::W] for w in range(W)]
-        flat = [f for s in shards for f in s]
-        assert sorted(flat) == files
-        assert len(set(flat)) == len(files)
-        # balanced to within one file
-        sizes = [len(s) for s in shards]
-        assert max(sizes) - min(sizes) <= 1
-
-    def test_iso_stable_cache_is_separate_from_single_jvm(self):
-        # the iso window must never republish (or be substituted by)
-        # a single-JVM 8->32 window: distinct cache files
-        a = bench.stable_cache_path((8, 32))
-        b = bench.stable_cache_path((8, 32), "iso")
-        assert a != b
-        assert "iso" in b.name
-
-
-class TestWorkerMultiJvm:
-    """worker_multi_jvm protocol units — subprocess stubbed, no Spark."""
-
-    class _FakeStdout:
-        def __init__(self, lines):
-            self._lines = list(lines)
-
-        def readline(self):
-            return self._lines.pop(0) if self._lines else ""
-
-        def __iter__(self):
-            while self._lines:
-                yield self._lines.pop(0)
-
-    class _FakeProc:
-        def __init__(self, lines, rc=0):
-            self.stdout = TestWorkerMultiJvm._FakeStdout(lines)
-            self._rc = rc
-            self.killed = False
-
-        def wait(self, timeout=None):
-            return self._rc
-
-        def poll(self):
-            return self._rc
-
-        def kill(self):
-            self.killed = True
-
-    def _shard_json(self, w, dps=1000.0):
-        return ('{"shard": %d, "cores": 8, "wall_sec": 10.0, '
-                '"docs": 150000, "docs_per_sec": %s, "affinity": 8}\n'
-                % (w, dps))
-
-    def test_aggregates_and_releases_barrier(self, monkeypatch):
-        procs = []
-
-        def fake_popen(cmd, **kw):
-            w = len(procs)
-            p = self._FakeProc([f"READY {w}\n", self._shard_json(w)])
-            procs.append(p)
-            return p
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert r["n_jvms"] == 4 and len(r["shards"]) == 4
-        assert r["docs"] == 600000
-        # aggregate = total docs / slowest shard wall
-        assert r["docs_per_sec"] == round(600000 / 10.0, 2)
-
-    def test_silent_hung_shard_trips_deadline_not_readline(
-            self, monkeypatch):
-        # the ADVICE hang: a shard JVM stuck in warm-up produces NO
-        # output; the old code blocked in p.stdout.readline() forever
-        # because the 600 s deadline was only checked between lines.
-        # A pump thread now owns the stream, so the READY wait times
-        # out, the attempt is killed, and the retry succeeds.
-        import threading
-
-        class _HungStdout:
-            """Blocks forever on iteration (until released)."""
-
-            def __init__(self):
-                self.release = threading.Event()
-
-            def __iter__(self):
-                self.release.wait()
-                return iter(())
-
-        hung_procs = []
-        attempt_procs = {"i": 0, "n": 0}
-        outer = self
-
-        def fake_popen(cmd, **kw):
-            if attempt_procs["i"] == 0:
-                attempt_procs["n"] += 1
-            w = attempt_procs["i"]
-            attempt_procs["i"] = (w + 1) % 4
-            if attempt_procs["n"] == 1 and w == 0:
-                p = outer._FakeProc([])
-                p.stdout = _HungStdout()
-                p.poll = lambda: None  # still running, like a real hang
-                hung_procs.append(p)
-                return p
-            return outer._FakeProc(
-                [f"READY {w}\n", outer._shard_json(w)])
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        monkeypatch.setattr(bench, "ISO_READY_TIMEOUT", 0.3)
-        t0 = __import__("time").monotonic()
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert __import__("time").monotonic() - t0 < 30
-        assert attempt_procs["n"] == 2 and r["docs"] == 600000
-        assert hung_procs[0].killed
-        for p in hung_procs:  # let the pump thread exit
-            p.stdout.release.set()
-
-    def test_dead_shard_retries_once_then_succeeds(self, monkeypatch):
-        attempts = {"n": 0}
-        procs_this_attempt = {"i": 0}
-
-        def fake_popen(cmd, **kw):
-            if procs_this_attempt["i"] == 0:
-                attempts["n"] += 1
-            w = procs_this_attempt["i"]
-            procs_this_attempt["i"] = (w + 1) % 4
-            if attempts["n"] == 1 and w == 0:
-                return self._FakeProc([])  # dies before READY
-            return self._FakeProc([f"READY {w}\n", self._shard_json(w)])
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert attempts["n"] == 2  # first attempt failed, second ran
-        assert r["docs"] == 600000
+class TestQueryLists:
+    def test_bench_queries_are_registered(self):
+        import __spark_entry__ as entrymod
+        names = set(entrymod.queries())
+        assert set(bench.HEADLINE) <= names
+        assert set(bench.INLINE_QUERIES) <= set(bench.HEADLINE)
+        assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)

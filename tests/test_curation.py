@@ -662,9 +662,10 @@ class TestWordlistFilter:
         # not just phrases: 'bad-word', "don't", 'sex.com' can never
         # equal a \W+-split token, while the regex strategy matches
         # them via \b — the equal-output contract demands a loud
-        # reject instead of a silent never-match
+        # reject instead of a silent never-match. 'café' too: the join
+        # splits on Java's ASCII \W+, so its token is 'caf'
         fn, df = self._docs(spark)
-        for w in ["bad-word", "don't", "sex.com"]:
+        for w in ["bad-word", "don't", "sex.com", "café"]:
             with pytest.raises(ValueError, match="non-word"):
                 fn(df, [w], strategy="join")
 

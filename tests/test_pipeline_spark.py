@@ -113,29 +113,50 @@ class TestSlimBlocks:
     extract() emits."""
 
     def test_slim_boiler_equals_tag_path_regex(self, spark, docs):
-        # per-block: slim's _is_boiler_path verdict == the full
-        # path's rlike(_boiler_path_regex) verdict, block by block
+        # per-block: the slim and the full schema carry the same
+        # boiler verdict, and it equals the boiler-ancestor rule read
+        # off the full path's tag_path segment by segment (no regex)
         from pyspark.sql import functions as F
 
         from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG as cfg
-        from dxnn_ocr_cpp_spark.operators.score import \
-            _boiler_path_regex
         from dxnn_ocr_cpp_spark.operators.segment import with_blocks
-        full = (with_blocks(docs.select("url", "html"))
-                .select("url", F.explode("seg.blocks").alias("b"))
-                .select("url", "b.block_id",
-                        F.col("b.tag_path")
-                         .rlike(_boiler_path_regex(cfg))
-                         .alias("boiler")))
-        slim = (with_blocks(docs.select("url", "html"), slim=True)
-                .select("url", F.explode("seg.blocks").alias("b"))
-                .select("url", "b.block_id",
-                        F.col("b.boiler").alias("boiler")))
-        a = {(r["url"], r["block_id"]): r["boiler"]
-             for r in full.collect()}
-        b = {(r["url"], r["block_id"]): r["boiler"]
-             for r in slim.collect()}
-        assert a == b and any(a.values()) and not all(a.values())
+
+        def verdicts(slim):
+            return {(r["url"], r["block_id"]): r for r in
+                    with_blocks(docs.select("url", "html"), slim=slim)
+                    .select("url", F.explode("seg.blocks").alias("b"))
+                    .select("url", "b.*").collect()}
+        full, slim = verdicts(False), verdicts(True)
+        assert {k: r["boiler"] for k, r in full.items()} \
+            == {k: r["boiler"] for k, r in slim.items()}
+        for r in full.values():
+            tags = [seg.split("[")[0] for seg in r["tag_path"].split("/")]
+            assert r["boiler"] == any(t in cfg.boiler_ancestors
+                                      for t in tags)
+        assert any(r["boiler"] for r in full.values())
+        assert not all(r["boiler"] for r in full.values())
+
+    def test_boiler_ancestor_with_regex_metachar(self, spark):
+        # a custom boiler tag holding a regex metachar ('.') must not
+        # match a look-alike tag ('xzy') on either schema: extract()
+        # (slim), extract_blocks (full) and extract_python agree
+        from pyspark.sql import functions as F
+        cfg = ExtractionConfig(boiler_ancestors=("x.y",))
+        body = "plain words about the engine and its pages " * 4
+        html = (f"<html><body><xzy><p>kept {body}</p></xzy>"
+                f"<x.y><p>dropped {body}</p></x.y>"
+                f"<p>tail {body}</p></body></html>").encode()
+        df = spark.createDataFrame([("u1", bytearray(html))],
+                                   "url string, html binary")
+        out = extract(df, cfg, keep_intermediate=True).collect()[0]
+        exp = extract_python("u1", html, cfg)
+        assert out["text"] == exp["text"]
+        assert "kept" in out["text"] and "dropped" not in out["text"]
+        slim = {b["block_id"]: b["score"] for b in out["scored"]}
+        full = {r["block_id"]: r["score"] for r in
+                extract_blocks(df, cfg).filter(F.col("block_id").isNotNull())
+                .collect()}
+        assert slim == full and len(full) == 3
 
     def test_slim_schema_has_no_tag_path(self, spark, docs):
         from dxnn_ocr_cpp_spark.pipeline import extract

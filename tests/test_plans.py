@@ -28,6 +28,19 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+class TestPlansAuditCoverage:
+    def test_every_query_has_a_plans_row(self):
+        # BENCH/PLANS.md is tools/plan_audit.py's output; a query
+        # registered after the last audit has no row there
+        import pathlib
+        text = (pathlib.Path(__file__).resolve().parents[1]
+                / "BENCH" / "PLANS.md").read_text()
+        rows = set(re.findall(r"^\| (\w+) \|", text, re.M))
+        missing = sorted(set(entrymod.queries()) - rows)
+        assert not missing, \
+            f"no BENCH/PLANS.md row (rerun tools/plan_audit.py): {missing}"
+
+
 class TestExtractionPlan:
     def test_zero_shuffle_one_python_hop(self, spark):
         df = extract(generate_documents_df(spark, 20))

@@ -556,6 +556,10 @@ class TestUrlWordlistScore:
         # would match every URL — reject loudly
         with pytest.raises(ValueError, match="normalization"):
             url_wordlist_score(df, [("-._", 1.0)])
+        # 'bad-word' and 'bad.word' both probe as 'badword': summing
+        # both weights would count one word twice
+        with pytest.raises(ValueError, match="collide"):
+            url_wordlist_score(df, [("bad-word", 1.0), ("bad.word", 0.5)])
 
     def test_entries_normalized_like_urls(self, spark):
         # an entry written with separators ('bad-alpha', 'bad.alpha')
